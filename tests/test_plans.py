@@ -35,13 +35,16 @@ def test_semi_and_anti_join_strategies(spark):
     assert "LeftAnti" in anti
 
 
-def test_sparkline_semi_join_stays_broadcast(spark):
-    """The target-station semi-join side is a distinct-station list —
-    tiny at any data scale — and must stay broadcast, never degrade to a
-    shuffled SortMergeJoin as the events side grows."""
+def test_sparkline_is_one_window_shuffle(spark):
+    """The per-station frame behind ``/alerts/critical`` is one window
+    over events: a single station-keyed Exchange feeds the window and the
+    sparkline aggregate, the top-5 filter becomes a WindowGroupLimit
+    below the shuffle, and no join re-reads events."""
     plan = _plan(registry.QUERIES["velib_sparkline"](spark, SF_DIR))
-    assert "BroadcastHashJoin" in plan and "LeftSemi" in plan
-    assert "SortMergeJoin" not in plan
+    assert plan.count("Exchange") == 1 and "hashpartitioning(user_id" in plan
+    assert plan.count("Window [") == 1
+    assert "WindowGroupLimit" in plan
+    assert "Join" not in plan
 
 
 def test_filter_pushdown_reaches_parquet_scan(spark):

@@ -268,6 +268,12 @@ def test_window_is_exactly_priority():
     assert WINDOW == list(registry.PRIORITY)
 
 
+def test_priority_and_secondary_are_disjoint():
+    both = set(registry.PRIORITY) & set(registry.SECONDARY)
+    assert not both, f"listed in both PRIORITY and SECONDARY: {sorted(both)}"
+    assert len(set(registry.SECONDARY)) == len(registry.SECONDARY)
+
+
 def test_every_family_covered():
     """A family is covered when a representative sits in the current
     window OR holds a green row in the last two CORRECTNESS artifacts.

@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import json
 
+from velib_lakehouse_spark import registry
 from velib_lakehouse_spark.serving import (
     critical_alerts_payload,
     pipeline_health_payload,
@@ -15,6 +16,7 @@ from velib_lakehouse_spark.sources.ingest import (
     to_keyed_messages,
 )
 from tests.conftest import SF_DIR
+from tests.oracle_harness import run_oracle
 
 
 def test_critical_alerts_payload_shape(spark):
@@ -26,6 +28,58 @@ def test_critical_alerts_payload_shape(spark):
     bikes = [s["current_bikes"] for s in p["stations"]]
     assert bikes == sorted(bikes)
     json.dumps(p)  # JSON-serializable end to end
+
+
+def test_critical_alerts_payload_matches_oracles(spark):
+    """The one-row payload equals the ``velib_sparkline`` and
+    ``velib_alert_bands`` DuckDB oracles, stations in
+    ``(current_bikes, station_code)`` order."""
+    p = critical_alerts_payload(spark, SF_DIR)
+    _, spark_rows = run_oracle(registry.ORACLE["velib_sparkline"], SF_DIR)
+    _, bands = run_oracle(registry.ORACLE["velib_alert_bands"], SF_DIR)
+    want = sorted((current, code, csv) for code, csv, current in spark_rows)
+    assert want, "the sparkline oracle is empty: the comparison proves nothing"
+    got = [
+        (
+            s["current_bikes"],
+            s["station_code"],
+            ",".join(str(round(x * 100)) for x in s["sparkline"]),
+        )
+        for s in p["stations"]
+    ]
+    assert got == want
+    assert (p["critical_count"], p["warning_count"], p["total_stations"]) == bands[0]
+
+
+def test_critical_alerts_payload_on_empty_events(spark, tmp_path):
+    from velib_lakehouse_spark.catalog import load_table
+
+    empty = str(tmp_path)
+    load_table(spark, SF_DIR, "events").limit(0).write.parquet(
+        f"{empty}/events.parquet"
+    )
+    assert critical_alerts_payload(spark, empty) == {
+        "stations": [],
+        "critical_count": 0,
+        "warning_count": 0,
+        "total_stations": 0,
+    }
+
+
+def test_critical_alerts_payload_job_budget(spark):
+    """One ``/alerts/critical`` call is one window pass plus a global
+    aggregate (4 Spark jobs, schema read included); the budget of 5
+    fails if a second events pass or a separate bands scan comes back."""
+    sc = spark.sparkContext
+    group = "critical-alerts-job-budget"
+    sc.setJobGroup(group, "one /alerts/critical call")
+    try:
+        critical_alerts_payload(spark, SF_DIR)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert 0 < len(jobs) <= 5, f"{len(jobs)} Spark jobs for one call"
 
 
 def test_pipeline_health_payload(spark):

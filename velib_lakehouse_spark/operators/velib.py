@@ -20,7 +20,7 @@ would partition-prune.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from velib_lakehouse_spark.catalog import load_table
@@ -119,33 +119,36 @@ def alerts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def sparkline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Serving query Q1 ``/alerts/critical`` (reference src/api.py:37-84).
+def station_recent(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-station frame behind ``/alerts/critical`` (reference
+    src/api.py:37-84): one row per station with its ordered 5-reading
+    ``sparkline_data`` and its latest value ``current_bikes``.
 
-    target stations (latest value <= threshold) -> left-semi join of
-    history onto targets (J2) -> top-5-recent per station (W2) ->
-    ordered list-agg of readings by time asc (A5, the LIST(ORDER BY)
-    idiom) -> current value from rank 1.  The semi-join side is tiny
-    (distinct stations) and broadcast; one window shuffle total.
+    One window over events (W2: newest first, event_id tiebreak) ranks
+    every reading; the top 5 per station are list-aggregated by time asc
+    (A5, the LIST(ORDER BY) idiom) and rank 1 gives the current value
+    (W1).  The aggregate groups on the window's own partitioning key, so
+    the frame costs one events shuffle.  :func:`sparkline` filters it,
+    :func:`alert_bands` and :func:`critical_alerts` aggregate it.
     """
     e = load_table(spark, sf_dir, "events")
-    latest = latest_per_key(e, "user_id", "ts", "event_id")
-    targets = latest.filter(F.col("value") <= TARGET_MAX).select("user_id")
-
     w = Window.partitionBy("user_id").orderBy(
         F.col("ts").desc(), F.col("event_id").desc()
     )
-    ranked = (
-        e.join(F.broadcast(targets), "user_id", "left_semi")
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 5)
-    )
-    return ranked.groupBy(F.col("user_id").alias("station_code")).agg(
+    ranked = e.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= 5)
+    return ranked.groupBy("user_id").agg(
         ordered_collect(
             F.col("value"), F.unix_millis("ts"), F.col("event_id")
         ).alias("sparkline_data"),
         F.max(F.when(F.col("rank") == 1, F.col("value"))).alias("current_bikes"),
-    )
+    ).withColumnRenamed("user_id", "station_code")
+
+
+def sparkline(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Serving query Q1 ``/alerts/critical`` (reference src/api.py:37-84):
+    the target stations (latest value <= threshold) of
+    :func:`station_recent`, with their sparklines."""
+    return station_recent(spark, sf_dir).filter(F.col("current_bikes") <= TARGET_MAX)
 
 
 def sparkline_export(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -162,17 +165,39 @@ def sparkline_export(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def alert_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The driver-side count-if bands folded into the engine (A7;
-    reference src/api.py:73-74 computes them in Python post-hoc)."""
-    e = load_table(spark, sf_dir, "events")
-    latest = latest_per_key(e, "user_id", "ts", "event_id")
-    return latest.agg(
-        F.count_if(F.col("value") < CRITICAL_MAX).alias("critical_count"),
-        F.count_if(
-            (F.col("value") >= CRITICAL_MAX) & (F.col("value") < ALERT_MAX)
-        ).alias("warning_count"),
+def band_counts() -> list[Column]:
+    """The count-if severity bands over :func:`station_recent`'s
+    ``current_bikes`` (A7; reference src/api.py:73-74 computes them in
+    Python post-hoc)."""
+    bikes = F.col("current_bikes")
+    return [
+        F.count_if(bikes < CRITICAL_MAX).alias("critical_count"),
+        F.count_if((bikes >= CRITICAL_MAX) & (bikes < ALERT_MAX)).alias(
+            "warning_count"
+        ),
         F.count(F.lit(1)).alias("total_stations"),
+    ]
+
+
+def alert_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The driver-side count-if bands folded into the engine: one global
+    aggregate over :func:`station_recent`."""
+    return station_recent(spark, sf_dir).agg(*band_counts())
+
+
+def critical_alerts(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The whole ``/alerts/critical`` payload as one row: the target
+    stations of :func:`sparkline` as an array of
+    ``(current_bikes, station_code, sparkline_data)`` structs sorted by
+    that order, plus :func:`band_counts`.  A single global aggregate over
+    :func:`station_recent`, so the payload costs one events shuffle."""
+    bikes = F.col("current_bikes")
+    target = F.struct(bikes, F.col("station_code"), F.col("sparkline_data"))
+    return station_recent(spark, sf_dir).agg(
+        F.array_sort(
+            F.collect_list(F.when(bikes <= TARGET_MAX, target))
+        ).alias("stations"),
+        *band_counts(),
     )
 
 

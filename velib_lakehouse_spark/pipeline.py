@@ -109,9 +109,10 @@ def run_medallion(
     alerts = build_alerts(history)
     gold_version = write_snapshot(alerts, gold_table)
 
-    gold = read_snapshot(spark, gold_table)
-    n_alerts = gold.count()
-    n_critical = gold.filter(F.col("alert_level") == "CRITICAL_EMPTY").count()
+    counts = read_snapshot(spark, gold_table).agg(
+        F.count(F.lit(1)).alias("alerts"),
+        F.count_if(F.col("alert_level") == "CRITICAL_EMPTY").alias("critical"),
+    ).collect()[0]
 
     removed = 0
     if retention_min_date:
@@ -120,8 +121,8 @@ def run_medallion(
     return {
         "silver_rows": stream_meta["rows_processed"],
         "gold_version": gold_version,
-        "alerts": n_alerts,
-        "critical": n_critical,
+        "alerts": counts.alerts,
+        "critical": counts.critical,
         "partitions_retired": removed,
         "gold_table": gold_table,
     }

@@ -38,8 +38,9 @@ DRIVER_WINDOW = 50
 #   TRANSITIVE over package helpers and constants, so helper-only
 #   rewrites can no longer coast on stale driver evidence).
 # * "oldest-first" (test_window_rotates_oldest_first).
-# This round's window, in order:
-# * 20 queries whose code changed in the r11 optimization round
+# The window holds, in slot order except where the last bullet swaps
+# rows in place:
+# * 15 of the 20 queries whose code changed in the r11 optimization round
 #   (directly or through shared helpers — the in-row WMH/ICWS
 #   signatures, the one-pass capped symmetric expansion, the in-row
 #   band-match tail consumers from r10 the ADVICE flagged as coasting
@@ -60,17 +61,25 @@ DRIVER_WINDOW = 50
 # * 9 next-stalest rows (r5/r6-era greens: seasonal backtest,
 #   link prediction, psi drift, gini, sliding counts, trend slope,
 #   tpch_q10/q6, image patches).
+# * velib_sparkline and velib_alert_bands, whose code now shares the
+#   one-window per-station frame (operators/velib.station_recent), and
+#   the stalest member of each family with no green row in r10/r11
+#   (decontaminate_ngram, inverted_index, pack_sequences; last green
+#   r07).  They take the slots of five unchanged rows green in both r10
+#   and r11: dedup_icws_weighted_minhash, dedup_incremental_minhash,
+#   editdist_verified_pairs, kcore_peeling, connected_components_star.
 # Displaced r10-green rows move to the TAIL of SECONDARY (freshest
-# evidence last); the SECONDARY head is the r12 rotation queue.
+# evidence last); the SECONDARY head is the r12 rotation queue.  A name
+# sits in at most one of PRIORITY and SECONDARY.
 PRIORITY: tuple[str, ...] = (
-    "dedup_icws_weighted_minhash",
+    "decontaminate_ngram",
     "dedup_icws_capped",
     "dedup_weighted_minhash",
     "dedup_weighted_minhash_capped",
     "dedup_minhash_lsh",
     "pairs_topk_capped",
-    "dedup_incremental_minhash",
-    "editdist_verified_pairs",
+    "velib_sparkline",
+    "inverted_index",
     "pandas_cogroup_paired_spend",
     "ann_graph_beam_audit",
     "multimodal_image_phash_neardup",
@@ -81,8 +90,8 @@ PRIORITY: tuple[str, ...] = (
     "bpe_encode_tokens",
     "bpe_train_merges_batched",
     "wordpiece_train_merges",
-    "kcore_peeling",
-    "connected_components_star",
+    "velib_alert_bands",
+    "pack_sequences",
     "streaming_python_datasource_feed",
     "table_checksum_audit",
     "tpch_q11_important_parts",
@@ -147,7 +156,6 @@ SECONDARY: tuple[str, ...] = (
     "velib_history_enrich",
     "velib_dedup_latest",
     "velib_alerts",
-    "velib_alert_bands",
     "velib_zombie_anti",
     "velib_enrich_join",
     "ann_cosine_topk",
@@ -191,8 +199,6 @@ SECONDARY: tuple[str, ...] = (
     "tpch_q1_pricing",
     "corpus_quality_report",
     "dedup_containment",
-    "decontaminate_ngram",
-    "inverted_index",
     "ann_ivf_topk",
     "ann_banded_lsh_topk",
     "ann_recall_audit",
@@ -202,7 +208,6 @@ SECONDARY: tuple[str, ...] = (
     "embedding_outliers",
     "tfidf_top_terms",
     "bm25_rank",
-    "pack_sequences",
     "theta_sketch_set_algebra",
     "compaction_execute",
     "anti_parts_never_ordered",
@@ -290,14 +295,12 @@ SECONDARY: tuple[str, ...] = (
     "streaming_session_windows",
     "streaming_stateful_enumerate",
     "streaming_static_enrich",
-    "velib_sparkline",
     "streaming_txn_sink",
     "snapshot_optimize_transactional",
     "bfs_hop_levels",
     "hll_sliding_distinct",
     "snapshot_shallow_clone",
     "bigram_perplexity_filter",
-    "multimodal_image_phash_neardup",
     "label_propagation_communities",
     "full_outer_activity_reconcile",
     "streaming_windowed_counts",
@@ -332,6 +335,11 @@ SECONDARY: tuple[str, ...] = (
     "snapshot_diff_cdc",
     "sorted_neighborhood_pairs",
     "streaming_join_left_outer",
+    "dedup_icws_weighted_minhash",
+    "dedup_incremental_minhash",
+    "editdist_verified_pairs",
+    "kcore_peeling",
+    "connected_components_star",
 )
 
 

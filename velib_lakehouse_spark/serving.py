@@ -9,34 +9,39 @@ returning the JSON-able dict the FastAPI handler would emit, and
 this build, so the wiring is import-gated; the payload functions are
 fully tested without it).
 
-The driver-side Python post-aggregation the reference does (count-if
-bands, src/api.py:73-74) is folded into the engine queries — the handler
-only serializes.
+``/alerts/critical`` is one engine query returning one row
+(``operators.velib.critical_alerts``): a single window over ``events``
+builds the shared per-station frame (``station_recent`` — current value
+and ordered 5-reading sparkline), and one global aggregate over it
+yields the sorted target stations and the count-if severity bands the
+reference computes in Python (src/api.py:73-74).  The registered
+``velib_sparkline`` and ``velib_alert_bands`` queries filter and
+aggregate that same frame.  The handlers only serialize.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import SparkSession
 
-from velib_lakehouse_spark.operators.velib import alert_bands, health, sparkline
+from velib_lakehouse_spark.operators.velib import critical_alerts, health
 
 
 def critical_alerts_payload(spark: SparkSession, sf_dir: str) -> dict:
-    """``/alerts/critical``: per-station sparklines + severity bands."""
-    stations = [
-        {
-            "station_code": r.station_code,
-            "current_bikes": r.current_bikes,
-            "sparkline": list(r.sparkline_data),
-        }
-        for r in sparkline(spark, sf_dir).orderBy("current_bikes").collect()
-    ]
-    bands = alert_bands(spark, sf_dir).collect()[0]
+    """``/alerts/critical``: per-station sparklines + severity bands, with
+    stations ordered by ``(current_bikes, station_code)``."""
+    row = critical_alerts(spark, sf_dir).collect()[0]
     return {
-        "stations": stations,
-        "critical_count": bands.critical_count,
-        "warning_count": bands.warning_count,
-        "total_stations": bands.total_stations,
+        "stations": [
+            {
+                "station_code": s.station_code,
+                "current_bikes": s.current_bikes,
+                "sparkline": list(s.sparkline_data),
+            }
+            for s in row.stations
+        ],
+        "critical_count": row.critical_count,
+        "warning_count": row.warning_count,
+        "total_stations": row.total_stations,
     }
 
 
